@@ -1115,31 +1115,6 @@ def q_containment(spark, sf_dir):
     )
 
 
-def q_ngram_jaccard_winnow(spark, sf_dir):
-    """ngram_jaccard with WINNOWED candidate generation (VERDICT r4 #3):
-    candidates come from per-doc window minima of the md5 gram-hash
-    sequence (window 4) instead of the full shingle stream — a ~2.5×
-    smaller self-join with the winnowing run-coverage guarantee; scores
-    stay exact from the full shingle sets."""
-    return D.ngram_jaccard_pairs(
-        _planted_text_union(spark, sf_dir), "doc_id", n_gram=3, threshold=0.8,
-        candidates="winnow", winnow_window=4, winnow_hash="md5",
-    )
-
-
-def q_ngram_jaccard_exploded(spark, sf_dir):
-    """ngram_jaccard with the zero-array EXPLODED pipeline (the 24M+/100 TB
-    shape, round 5): candidates from bigint hashes of the positional codegen
-    gram stream, verification from distinct string grams of candidate docs
-    only (dedup._exploded_pair_overlaps) — no per-doc shingle arrays, no
-    interpreted HOF anywhere in the plan.  Same oracle as ngram_jaccard:
-    pair set and scores are identical whenever the df cap does not bind."""
-    return D.ngram_jaccard_pairs(
-        _planted_text_union(spark, sf_dir), "doc_id", n_gram=3, threshold=0.8,
-        candidates="exploded",
-    )
-
-
 def q_near_dup_clusters(spark, sf_dir):
     """Connected components over the MinHash-LSH candidate pairs: every doc
     labelled with the smallest doc_id in its near-dup group."""
@@ -1761,15 +1736,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       3. the 37 remaining queries whose newest driver row is r03 (they were
          beyond r04's 50-cap).
 
-    Displaced beyond the cap by the four r5 insertions (domain_stats,
-    domain_filter, ngram_jaccard_exploded, simhash_near_dups):
-    dedup_agg and dedup_window (r03-green; their mechanics-siblings
-    duplicate_keys_lang/salted and canonical_dedup ARE in the window),
+    The registry holds 92 rows.  Displaced beyond the cap:
     orphans_shuffle_hash (r03-green; its sibling orphans_events IS in the
-    window), and asof_join_sliced (r04-green; skew-probed this round,
-    tools/asof_skew_probe.py).  CORRECTNESS_r05 ∪ r04 covers all but the
-    three r03-green displacements above, each untouched since r3 and
-    re-verified in this round's committed local 94/94 sweep.
+    window) and asof_join_sliced (r04-green; skew-probed in round 5,
+    tools/asof_skew_probe.py).  dedup_agg and dedup_window (r03-green)
+    were displaced by the round-5 insertions and are back in the window
+    at positions 49-50, since ngram_jaccard_winnow (its winnow candidate
+    code is gone) and ngram_jaccard_exploded (now the same call as
+    ngram_jaccard, which keeps checking it) left the registry.
     The tail beyond position 50 (all r04-green, untouched this round) is
     covered by the committed local run of tools/oracle_check.py recorded in
     BENCH/ROUNDLOG_r05.md.
@@ -1781,8 +1755,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_classifier": q_quality_classifier,
         "quality_classifier_table": q_quality_classifier_table,
         "ngram_jaccard": q_ngram_jaccard,
-        "ngram_jaccard_winnow": q_ngram_jaccard_winnow,
-        "ngram_jaccard_exploded": q_ngram_jaccard_exploded,
         "simhash_near_dups": q_simhash_near_dups,
         "containment": q_containment,
         "near_dup_clusters": q_near_dup_clusters,
@@ -3319,41 +3291,6 @@ SELECT id_a, id_b,
 FROM s
 WHERE round(inter_size / (a_n + b_n - inter_size)::DOUBLE, 6) >= 0.8
 """,
-        "ngram_jaccard_winnow": f"""
-WITH {_SHINGLE_CTE},
--- POSITIONAL md5 gram-hash sequence (duplicates kept; <3-word docs fall
--- back to the whole normalized text) mirroring dedup.winnowed_keys
-gr AS (
-  SELECT _id,
-    CASE WHEN len(ws) >= 3
-      THEN [md5(array_to_string(ws[i:i+2], ' ')) FOR i IN generate_series(1, len(ws) - 2)]
-      ELSE [md5(t)] END AS gh
-  FROM words
-),
--- winnowing: min of every 4-long window of consecutive gram hashes
-wk AS (
-  SELECT _id, unnest(list_distinct(
-    [list_min(gh[p:p+3]) FOR p IN generate_series(1, greatest(len(gh) - 3, 1))]
-  )) AS g
-  FROM gr
-),
-rare AS (SELECT g FROM wk GROUP BY g HAVING count(*) <= 10000),
-wkr AS (SELECT _id, g FROM wk JOIN rare USING (g)),
-cand AS (
-  SELECT DISTINCT l._id AS id_a, r._id AS id_b
-  FROM wkr l JOIN wkr r ON l.g = r.g AND l._id < r._id
-),
-s AS (
-  SELECT id_a, id_b,
-    len(list_intersect(a.sh, b.sh)) AS inter_size,
-    len(a.sh) AS a_n, len(b.sh) AS b_n
-  FROM cand JOIN sh a ON a._id = id_a JOIN sh b ON b._id = id_b
-)
-SELECT id_a, id_b,
-  round(inter_size / (a_n + b_n - inter_size)::DOUBLE, 6) AS jaccard
-FROM s
-WHERE round(inter_size / (a_n + b_n - inter_size)::DOUBLE, 6) >= 0.8
-""",
         "cosine_topk": """
 WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
 c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
@@ -3740,9 +3677,4 @@ SELECT doc_id AS media_id,
 FROM fr
 """,
     }
-    # candidates="exploded" (zero-array scale path) yields the IDENTICAL
-    # pair set and scores as the array path whenever the df cap does not
-    # bind (10000 never binds at sf0.01) — the array-path oracle is its
-    # oracle by construction.
-    sql["ngram_jaccard_exploded"] = sql["ngram_jaccard"]
     return sql

@@ -256,14 +256,12 @@ def main():
         extras["simhash_24m_sec"] = round(dt, 3)
         extras["simhash_24m_docs_per_sec"] = round(RUN_FULL_ROWS / dt, 1)
 
-        # containment via the zero-array exploded scale path (the winnow /
-        # shingle-array paths pay two interpreted-HOF scans — ~10 min at
-        # 24M before any join); tight doc-freq cap — crawl boilerplate
-        # keys are quadratic in bucket members otherwise
+        # containment over the hashed positional gram stream; tight
+        # doc-freq cap — crawl boilerplate keys are quadratic in bucket
+        # members otherwise
         t0 = time.time()
         D.containment_pairs(
             mh_docs, "doc_id", threshold=0.9, max_doc_freq=100,
-            candidates="exploded",
         ).count()
         dt = time.time() - t0
         extras["containment_24m_sec"] = round(dt, 3)

@@ -2,13 +2,15 @@
 embedding-cosine near-dup.  (Exact dedup lives in uniqueness.py.)
 
 Scale design:
-- Shingling/minhashing are per-row native array expressions — no shuffle, no
-  Python.
+- Per-doc grams come from an exploded stream of gram POSITIONS built with
+  native per-row expressions (``exploded_gram_stream``) — no shuffle, no
+  Python, no interpreted higher-order function.
 - LSH banding turns the O(n²) pair problem into groupBy(band_hash): only rows
   sharing a band bucket are joined.  At 10^12 docs, band buckets are the only
   viable candidate generator.
-- Candidate verification (exact Jaccard on shingle sets) joins the (small)
-  candidate-pair set back to the shingle arrays.
+- Exact n-gram Jaccard/containment verification re-derives distinct gram
+  strings for CANDIDATE DOCS ONLY, so verify cost scales with the candidate
+  set, not the corpus.
 - Two hash families: ``xxhash64`` (fast JVM path, default) and ``md5``
   (byte-identical in DuckDB → used by the oracle-checked queries).
 """
@@ -47,64 +49,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     if n_parts < max(target // 2, 2):
         return df.repartition(target)
     return df
-
-
-# -- shingling ---------------------------------------------------------------
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of whitespace-normalized lowercase text.
-    Returns array<string> (empty array for short docs)."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    words = F.split(normalized, " ")
-    count = F.size(words)
-    grams = F.when(count >= n, F.transform(
-        F.sequence(F.lit(1), count - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )).otherwise(F.array(normalized))
-    return F.array_distinct(grams)
-
-
-def char_shingles(text: Column, k: int = 8) -> Column:
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    n = F.length(normalized)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.substr(normalized, i, F.lit(k)),
-    )
-    return F.array_distinct(grams)
-
-
-# -- MinHash -----------------------------------------------------------------
-
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, hash_fn: str = "xxhash64"
-) -> Column:
-    """k-permutation MinHash signature over a shingle array.
-
-    xxhash64: array<bigint> of min(xxhash64(seed_i, shingle)).
-    md5:      array<string> of lexicographic min(md5(i || shingle)) — slower
-              but byte-identical in DuckDB (oracle path).
-    """
-    # NB: seeds must be bound via closure factories — a default-arg lambda
-    # (lambda s, i=i: ...) would be treated by PySpark as a two-parameter
-    # (element, index) lambda and the seed silently replaced by the index.
-    # (A nested transform-over-seed-sequence form builds a 16x smaller plan
-    # but executes ~5x slower: the flat F.array lets SimplifyExtractValueOps
-    # reduce each band's _sig[i] to its single component, and nested lambda
-    # binding is pure interpreted overhead — measured, do not "simplify".)
-    def _xx(i: int):
-        return lambda s: F.xxhash64(F.lit(i), s)
-
-    def _md5(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    if hash_fn == "xxhash64":
-        sig = [F.array_min(F.transform(shingles, _xx(i))) for i in range(num_hashes)]
-    elif hash_fn == "md5":
-        sig = [F.array_min(F.transform(shingles, _md5(i))) for i in range(num_hashes)]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return F.array(*sig)
 
 
 def _non_degenerate_text(df: DataFrame, text_col: str = "_text") -> DataFrame:
@@ -194,12 +138,14 @@ def shingled_docs(
     n_gram: int = 3,
     max_shingles: "int | None" = None,
 ) -> DataFrame:
-    """(_id, _shingles): DISTINCT word n-grams per non-degenerate doc.
+    """(_id, _shingles): DISTINCT word n-grams per non-degenerate doc; short
+    docs fall back to the single whole-normalized-text shingle.
 
-    Equivalent to ``word_shingles`` on the same text (short docs fall back to
-    the single whole-normalized-text shingle) but built over the materialized
-    ``_words`` projection, so each gram lambda costs one slice+concat instead
-    of a full regex+split re-evaluation (see ``_normalized_words``).
+    Built over the materialized ``_words`` projection, so each gram lambda
+    costs one slice+concat instead of a full regex+split re-evaluation (see
+    ``_normalized_words``).  Used where a distinct-gram set per doc is
+    needed: benchmark decontamination, the duplicate-n-gram fraction and
+    the md5 SimHash family.
     """
     words = _normalized_words(df, id_col, text_col)
     w = F.col("_words")
@@ -233,7 +179,7 @@ def exploded_gram_stream(
     array_distinct); use only under aggregates that are multiset-invariant
     (MIN for MinHash signatures) or followed by an explicit distinct.  Short
     docs emit the whole normalized text as their single gram, matching
-    ``word_shingles``' fallback.  ``max_positions`` truncates each doc to its
+    ``shingled_docs``' fallback.  ``max_positions`` truncates each doc to its
     first that-many gram positions (callers whose downstream state must stay
     bounded per doc, e.g. SimHash's 16-bit vote lanes).
     """
@@ -282,9 +228,8 @@ def minhash_lsh_candidates(
     interpreted eval re-runs the shingle split per gram (~3.5 ms/doc
     measured — see ``_normalized_words``), while this shape is 100% codegen
     with a map-side-combined single shuffle keyed by doc id (~32 longs/doc).
-    MIN is multiset-invariant, so skipping array_distinct changes nothing;
-    both hash families produce bit-identical signatures to the HOF form
-    (lexicographic MIN for the md5 family equals array_min on strings).
+    MIN is multiset-invariant, so duplicate grams change nothing (for the
+    md5 family MIN is lexicographic over the hex strings).
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
@@ -374,67 +319,6 @@ def minhash_near_duplicates(
 
 # -- exact n-gram Jaccard ------------------------------------------------------
 
-def winnowed_keys(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n_gram: int = 3,
-    window: int = 4,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(_id, _g): winnowing-selected candidate keys per doc — the minimum
-    gram hash of every ``window`` consecutive word n-grams (Schleimer/
-    Wilkerson/Aiken winnowing over the POSITIONAL gram sequence).
-
-    The winnowing guarantee: two documents sharing any run of
-    ``window + n_gram − 1`` consecutive words share a full gram window, so
-    they share that window's minimum — every real near-dup/containment pair
-    (which shares many such runs) is discovered, while each doc contributes
-    only ~2·n_grams/(window+1) distinct keys instead of all n_grams.  Keys
-    are HASHES (collisions only ADD candidates — verification is exact from
-    the full shingle sets — never lose pairs).
-
-    ``hash_fn``: ``"xxhash64"`` (default) → BIGINT keys, the fast
-    production family; ``"md5"`` → hex-string keys with lexicographic-min
-    selection, byte-replayable by any SQL engine (the oracle family).
-
-    100 TB shape: zero shuffle and zero window functions — grams never
-    leave their row.  Per the interpreted-HOF rule the gram-hash array is
-    materialized in its OWN projection, so the window-minima lambda touches
-    only integer slices of ``_ghash`` (never recomputes a gram), and the
-    word split runs once per doc (``_normalized_words``)."""
-    if hash_fn == "xxhash64":
-        def _h(g: Column) -> Column:
-            return F.xxhash64(g)
-    elif hash_fn == "md5":
-        def _h(g: Column) -> Column:
-            return F.md5(g)
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    words = _normalized_words(df, id_col, text_col)
-    w = F.col("_words")
-    cnt = F.size(w)
-    # positional (NOT distinct) gram-hash sequence; <n_gram-word docs fall
-    # back to the whole normalized text, matching word_shingles/shingled_docs
-    ghash = F.when(
-        cnt >= n_gram,
-        F.transform(
-            F.sequence(F.lit(1), cnt - (n_gram - 1)),
-            lambda i: _h(F.concat_ws(" ", F.slice(w, i, n_gram))),
-        ),
-    ).otherwise(F.array(_h(F.concat_ws(" ", w))))
-    hashed = words.select("_id", ghash.alias("_ghash"))
-    g = F.col("_ghash")
-    n_windows = F.greatest(F.size(g) - (window - 1), F.lit(1))
-    mins = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda p: F.array_min(F.slice(g, p, window)),
-        )
-    )
-    return hashed.select("_id", F.explode(mins).alias("_g"))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -443,34 +327,28 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_doc_freq: int = 10_000,
     candidate_sample_mod: "int | None" = None,
-    candidates: str = "shingles",
-    winnow_window: int = 4,
-    winnow_hash: str = "xxhash64",
+    candidates: str = "exploded",
 ) -> DataFrame:
-    """Exact Jaccard over word n-gram sets for pairs sharing ≥1 RARE shingle.
+    """Exact Jaccard over word n-gram sets for pairs sharing ≥1 RARE gram.
 
-    Candidate generation = explode(shingles) self-join on the shingle, with a
-    document-frequency cap: shingles appearing in more than ``max_doc_freq``
-    docs are dropped BEFORE the self-join, so one stop-shingle ("the quick
-    brown" in 10⁶ docs) can't create 10¹² join rows — each surviving shingle
-    contributes at most max_doc_freq² pairs.  The Jaccard itself stays EXACT:
-    candidates join back to the FULL shingle arrays and intersect natively
-    (``array_intersect``), so the cap affects only which pairs are
-    discovered, never their score.  A pair whose every common shingle is
+    Candidate generation = a self-join of the per-position gram stream on
+    the gram's hash, with a frequency cap: gram keys with more than
+    ``max_doc_freq`` OCCURRENCES across the corpus (a doc that repeats a
+    gram counts each repeat) are dropped BEFORE the self-join, so one
+    stop-gram ("the quick brown" in 10⁶ docs) can't create 10¹² join rows.
+    The Jaccard itself stays EXACT: it is computed from the distinct gram
+    strings of each candidate pair, so the cap affects only which pairs are
+    discovered, never their score.  A pair whose every common gram is
     hotter than the cap is not a meaningful near-dup.  Pass
     ``max_doc_freq=None`` to disable.  Output: (id_a, id_b, jaccard).
 
-    ``candidate_sample_mod=p`` enables mod-p shingle sampling for candidate
+    ``candidate_sample_mod=p`` enables mod-p gram sampling for candidate
     generation (see ``_ngram_pair_overlaps``) — a 100 TB scale path.
-    ``candidates="winnow"`` generates candidates from winnowed fingerprints
-    instead (``winnowed_keys``): a ~(window+1)/2× smaller self-join input
-    than even mod-p, with the winnowing guarantee that any pair sharing a
-    ``winnow_window + n_gram − 1``-word run is discovered.  Scores are
-    unchanged either way — verification is exact from the full sets.
+    ``candidates`` accepts only ``"exploded"``.
     """
     sizes = _ngram_pair_overlaps(
         df, id_col, text_col, n_gram, max_doc_freq, candidate_sample_mod,
-        candidates, winnow_window, winnow_hash,
+        candidates,
     )
     jac = F.col("inter_size") / (
         F.col("a_n") + F.col("b_n") - F.col("inter_size")
@@ -487,123 +365,33 @@ def _ngram_pair_overlaps(
     n_gram: int,
     max_doc_freq: "int | None",
     candidate_sample_mod: "int | None" = None,
-    candidates: str = "shingles",
-    winnow_window: int = 4,
-    winnow_hash: str = "xxhash64",
+    candidates: str = "exploded",
 ) -> DataFrame:
-    """Shared core of ``ngram_jaccard_pairs`` / ``containment_pairs``:
-    df-capped shingle self-join for candidates, then exact native
-    ``array_intersect`` on the full shingle sets.  Output per candidate
-    pair (id_a < id_b): (id_a, id_b, inter_size, a_n, b_n).
+    """Shared core of ``ngram_jaccard_pairs`` / ``containment_pairs``.
+    Output per candidate pair (id_a < id_b): (id_a, id_b, inter_size, a_n,
+    b_n) — shared and per-doc DISTINCT gram counts.
 
-    ``candidate_sample_mod=p`` (the 100 TB scale path) generates candidates
-    from only the shingles whose xxhash64 ≡ 0 (mod p).  Selection is
-    deterministic per shingle VALUE, so both members of a pair keep or drop
-    the same shingles — a pair is discovered iff ANY of its m common
-    shingles is selected, P(miss) = (1 − 1/p)^m (< 0.4% for a 20-common-
-    shingle near-dup at p = 4), while the self-join input shrinks p-fold
-    and hot-shingle join cost p²-fold.
-
-    ``candidates="winnow"`` replaces the shingle stream with winnowed
-    fingerprint keys (``winnowed_keys``) — deterministic run-coverage
-    instead of probabilistic value sampling.  Verification is UNAFFECTED by
-    either choice — scores of discovered pairs come from the full shingle
-    sets either way.
-
-    ``candidates="exploded"`` is the 24M+/100 TB shape: no per-doc shingle
-    ARRAYS anywhere in the plan.  The array paths above pay two
-    interpreted-HOF passes over every doc (``shingled_docs``'s
-    slice+concat ``transform`` and, for winnow, the ``_ghash`` lambda) —
-    measured ~10 min of pure scan at 24M docs before any join — and carry
-    kilobyte array cells through the verify joins.  Here candidates come
-    from the positional codegen gram stream hashed to BIGINT keys
-    (``exploded_gram_stream`` → ``xxhash64``; key collisions only ADD
-    candidates), and verification re-derives DISTINCT STRING grams for
+    No per-doc arrays and no interpreted higher-order function anywhere in
+    the plan: every expression is whole-stage codegen.  Candidates come from
+    the positional gram stream (``exploded_gram_stream``) hashed to BIGINT
+    keys (key collisions only ADD candidates), occurrence-capped by
+    ``max_doc_freq``.  Verification re-derives DISTINCT STRING grams for
     CANDIDATE DOCS ONLY — a semi-join the AQE planner turns into a
     broadcast against the gram stream when the candidate id set is small,
     so verify cost scales with the number of candidates, not the corpus.
-    Two cap-semantics deltas vs the array paths, both documented-benign:
-    the df cap counts gram OCCURRENCES rather than distinct docs (equal
-    unless a doc repeats a gram), and per-doc gram truncation is by
-    position rather than by distinct-gram rank.  Scores of discovered
-    pairs are exact string-set arithmetic either way."""
-    if candidates not in ("shingles", "winnow", "exploded"):
+
+    ``candidate_sample_mod=p`` (the 100 TB scale path) generates candidates
+    from only the gram keys ≡ 0 (mod p).  Selection is deterministic per
+    gram VALUE, so both members of a pair keep or drop the same grams — a
+    pair is discovered iff ANY of its m common grams is selected,
+    P(miss) = (1 − 1/p)^m (< 0.4% for a 20-common-gram near-dup at p = 4),
+    while the self-join input shrinks p-fold and hot-gram join cost
+    p²-fold.  Scores of discovered pairs are unaffected."""
+    if candidates != "exploded":
         raise ValueError(
-            "candidates must be 'shingles', 'winnow' or 'exploded', "
-            f"got {candidates!r}"
+            f"candidates must be 'exploded', got {candidates!r}: the "
+            "'shingles' array and 'winnow' candidate paths were removed"
         )
-    if candidates == "exploded":
-        return _exploded_pair_overlaps(
-            df, id_col, text_col, n_gram, max_doc_freq, candidate_sample_mod
-        )
-    sh = shingled_docs(df, id_col, text_col, n_gram).select(
-        "_id", F.col("_shingles").alias("_sh")
-    )
-    if candidates == "winnow":
-        exploded = winnowed_keys(
-            df, id_col, text_col, n_gram, winnow_window, winnow_hash
-        )
-    else:
-        exploded = sh.select("_id", F.explode("_sh").alias("_g"))
-    if candidate_sample_mod is not None and candidate_sample_mod > 1:
-        exploded = exploded.where(
-            F.pmod(F.xxhash64("_g"), F.lit(candidate_sample_mod)) == 0
-        )
-    if max_doc_freq is not None:
-        # anti-join the OVER-cap keys, not inner-join the under-cap ones:
-        # on real crawl text almost every shingle is rare, so the under-cap
-        # set is nearly the whole key space (a per-task hash-join build of
-        # ~all entries — the exact OOM shape _cap_hot_buckets hit), while
-        # the over-cap set is bounded by n_entries/max_doc_freq.  Same
-        # surviving entries either way; AQE turns this into a broadcast
-        # join at runtime whenever the hot-key side is small (no forced
-        # broadcast — adversarial substrates can make it large).
-        hot = (
-            exploded.groupBy("_g")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > max_doc_freq)
-            .select("_g")
-        )
-        exploded = exploded.join(hot, "_g", "left_anti")
-    cand = (
-        exploded.alias("l")
-        .join(
-            exploded.alias("r"),
-            (F.col("l._g") == F.col("r._g")) & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # exact verification on the candidate set only: intersect the full
-    # (distinct) shingle arrays natively — no Python, no re-explode
-    return (
-        cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")), "id_a"
-        )
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")), "id_b"
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("_sha", "_shb")).alias("inter_size"),
-            F.size("_sha").alias("a_n"),
-            F.size("_shb").alias("b_n"),
-        )
-    )
-
-
-def _exploded_pair_overlaps(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_gram: int,
-    max_doc_freq: "int | None",
-    candidate_sample_mod: "int | None",
-) -> DataFrame:
-    """``candidates="exploded"`` body (see ``_ngram_pair_overlaps``): every
-    expression whole-stage codegen, no per-doc arrays, verify bounded by the
-    candidate set.  Output: (id_a, id_b, inter_size, a_n, b_n)."""
     grams = exploded_gram_stream(df, id_col, text_col, n_gram)
 
     # -- candidates: bigint gram-hash keys, df-capped, optional mod-p ------
@@ -613,8 +401,14 @@ def _exploded_pair_overlaps(
             F.pmod(F.col("_k"), F.lit(candidate_sample_mod)) == 0
         )
     if max_doc_freq is not None:
-        # occurrence-df cap, anti-joined on the (bounded) hot-key side —
-        # same reasoning as the array path's cap above
+        # anti-join the OVER-cap keys, not inner-join the under-cap ones:
+        # on real crawl text almost every gram is rare, so the under-cap
+        # set is nearly the whole key space (a per-task hash-join build of
+        # ~all entries — the exact OOM shape _cap_hot_buckets hit), while
+        # the over-cap set is bounded by n_entries/max_doc_freq.  Same
+        # surviving entries either way; AQE turns this into a broadcast
+        # join at runtime whenever the hot-key side is small (no forced
+        # broadcast — adversarial substrates can make it large).
         hot = (
             keyed.groupBy("_k")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -675,29 +469,28 @@ def containment_pairs(
     threshold: float = 0.8,
     max_doc_freq: int = 10_000,
     candidate_sample_mod: "int | None" = None,
-    candidates: str = "shingles",
-    winnow_window: int = 4,
-    winnow_hash: str = "xxhash64",
+    candidates: str = "exploded",
 ) -> DataFrame:
     """ASYMMETRIC partial-duplicate detection: containment(A in B) =
-    |shingles(A) ∩ shingles(B)| / |shingles(A)| — catches quotations,
-    boilerplate-wrapped copies and subset pages that symmetric Jaccard
-    structurally misses (a 100-word doc quoted whole inside a 10k-word page
-    has Jaccard ≈ 0.01 but containment 1.0).  Output: (id_a, id_b,
-    containment) where ``containment`` is the fraction of ``id_a``'s
-    shingles present in ``id_b``; BOTH directions of a candidate pair are
+    |grams(A) ∩ grams(B)| / |grams(A)| over DISTINCT word n-grams — catches
+    quotations, boilerplate-wrapped copies and subset pages that symmetric
+    Jaccard structurally misses (a 100-word doc quoted whole inside a
+    10k-word page has Jaccard ≈ 0.01 but containment 1.0).  Output: (id_a,
+    id_b, containment) where ``containment`` is the fraction of ``id_a``'s
+    grams present in ``id_b``; BOTH directions of a candidate pair are
     scored and each emits independently when it clears ``threshold``.
 
     100 TB shape: candidate generation and exact verification are the
-    ``ngram_jaccard_pairs`` machinery (df-capped shingle join — never
-    all-pairs — and one native ``array_intersect`` per candidate); the two
+    ``ngram_jaccard_pairs`` machinery (see ``_ngram_pair_overlaps``): a
+    hashed-gram self-join — never all-pairs — whose ``max_doc_freq`` cap
+    counts gram OCCURRENCES across the corpus, not distinct docs; the two
     directions come from ONE explode over the already-verified sizes, so
     the pair set is computed once.  ``candidate_sample_mod=p`` enables the
-    mod-p shingle-sampling scale path and ``candidates="winnow"`` the
-    winnowed-fingerprint path (see ``_ngram_pair_overlaps``)."""
+    mod-p gram-sampling scale path.  ``candidates`` accepts only
+    ``"exploded"``."""
     sizes = _ngram_pair_overlaps(
         df, id_col, text_col, n_gram, max_doc_freq, candidate_sample_mod,
-        candidates, winnow_window, winnow_hash,
+        candidates,
     )
     inter = F.col("inter_size")
     both = sizes.select(
@@ -720,33 +513,6 @@ def containment_pairs(
 
 
 # -- SimHash -------------------------------------------------------------------
-
-def simhash64(text: Column, n_gram: int = 2) -> Column:
-    """64-bit SimHash fingerprint: per-bit majority vote over shingle hashes.
-
-    Native bit arithmetic via aggregate over the shingle array: accumulator =
-    array of 64 vote counters packed as one pass of shiftright/bitand.
-    Implemented as a fold into an array<int> of votes, then sign → bits.
-    """
-    shingles = word_shingles(text, n_gram)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    def _vote_merge(i: int):
-        # closure factory, NOT a default arg (see minhash_signature note)
-        return lambda acc, h: acc + (
-            F.shiftright(h, i).bitwiseAND(F.lit(1).cast("bigint")).cast("int") * 2 - 1
-        )
-
-    fp = F.lit(0).cast("bigint")
-    for i in range(64):
-        # vote_i = Σ over shingles of (+1 if bit i set else −1)
-        vote = F.aggregate(hashes, F.lit(0), _vote_merge(i))
-        fp = fp.bitwiseOR(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return fp
-
 
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
@@ -776,8 +542,6 @@ def simhash_fingerprints(
     md5(shingle) — byte-identical in DuckDB, so the whole SimHash pipeline is
     oracle-checkable (the reason this variant exists).
 
-    This is the scale shape: the single-expression ``simhash64`` fold evaluates
-    64 array passes per row — fine for ad-hoc use, ~10× slower in practice.
     Output: (_id, _fp).
 
     Path split (the r4 minhash lesson, applied r5): the FAST family streams

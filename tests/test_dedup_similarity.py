@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import itertools
 import math
+import re
 
 import numpy as np
 import pytest
@@ -495,6 +497,22 @@ def test_ngram_hot_shingle_cap(spark):
         df, "doc_id", threshold=0.0, max_doc_freq=None
     ).count()
     assert uncapped == 31 * 30 / 2
+    # the cap counts gram OCCURRENCES, not docs: doc 200 repeats "rep rep
+    # rep" 6 times, so that key (7 occurrences, 2 docs) is over a cap of 5
+    # and the pair it alone links is never a candidate
+    rep = spark.createDataFrame(
+        [(200, "rep " * 8), (201, "rep rep rep alpha beta")],
+        "doc_id long, text string",
+    )
+    assert dedup.ngram_jaccard_pairs(
+        rep, "doc_id", threshold=0.3, max_doc_freq=5
+    ).collect() == []
+    assert {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(
+            rep, "doc_id", threshold=0.3, max_doc_freq=None
+        ).collect()
+    } == {(200, 201): 0.333333}
 
 
 def test_keep_best_per_cluster(spark):
@@ -796,71 +814,36 @@ def test_mod_p_candidate_sampling_finds_near_dups_exactly(spark):
     assert set(c_sampled) <= set(c_full)
 
 
-def test_winnow_candidates_find_near_dups_exactly(spark):
-    # VERDICT r4 #3: winnowed-fingerprint candidate generation — a far
-    # smaller self-join than the full shingle stream, with the winnowing
-    # guarantee (any shared window+n_gram-1-word run -> shared key), exact
-    # scores from the full sets, and pair set ⊆ the exhaustive pair set.
-    from schema_validator_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
-        winnowed_keys,
-    )
-
-    base = " ".join(f"w{i} tok{i} x{i}" for i in range(30))
-    small = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (1, base),
-        (2, base + " tail one two"),       # planted near-dup of 1
-        (3, "completely different words here that share nothing at all"),
-        (4, small),
-        (5, small + " " + " ".join(f"pad{i} fill{i}" for i in range(30))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", threshold=0.5).collect()
-    }
-    for hash_fn in ("xxhash64", "md5"):
-        win = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", threshold=0.5,
-                candidates="winnow", winnow_hash=hash_fn,
-            ).collect()
-        }
-        # planted near-dup found, with the IDENTICAL exact score
-        assert win.get((1, 2)) == full[(1, 2)]
-        # winnowing only narrows candidate discovery, never scores
-        assert set(win) <= set(full)
-    # containment: the contained-doc pair shares long runs -> discovered
-    c_win = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_pairs(
-            df, "doc_id", threshold=0.8, candidates="winnow"
-        ).collect()
-    }
-    assert c_win.get((4, 5)) == 1.0 and c_win.get((1, 2)) == 1.0
-    # the key stream really is winnowed: far fewer keys than shingles, and
-    # both members of the planted pair share at least one key
-    keys = winnowed_keys(df, "doc_id").collect()
-    n_grams = 3 * 30 - 2
-    per_doc = {}
-    for r in keys:
-        per_doc.setdefault(r["_id"], set()).add(r["_g"])
-    assert len(per_doc[1]) < n_grams / 2
-    assert per_doc[1] & per_doc[2]
-    with pytest.raises(ValueError, match="candidates"):
-        ngram_jaccard_pairs(df, "doc_id", candidates="bogus").collect()
-    with pytest.raises(ValueError, match="hash_fn"):
-        winnowed_keys(df, "doc_id", hash_fn="sha1").collect()
+def _reference_grams(text, n=3):
+    # the kernels' normalisation: lowercase, trim spaces, collapse
+    # whitespace; distinct word n-grams, whole text for docs under n words
+    words = re.sub(r"\s+", " ", text.lower().strip(" "), flags=re.ASCII).split(" ")
+    if len(words) < n:
+        return {" ".join(words)}
+    return {" ".join(words[i:i + n]) for i in range(len(words) - n + 1)}
 
 
-def test_exploded_candidates_match_array_path_exactly(spark):
-    # candidates="exploded" (the zero-array 24M+ shape) must reproduce the
-    # array path's pair set AND scores exactly when no cap binds: candidate
-    # keys are gram hashes (collisions only add candidates), verification
-    # is distinct-string-gram arithmetic on candidate docs only.
+def _reference_pairs(rows, threshold, containment=False):
+    grams = {i: _reference_grams(t) for i, t in rows if t and t.strip(" ")}
+    out = {}
+    for a, b in itertools.combinations(sorted(grams), 2):
+        ga, gb = grams[a], grams[b]
+        inter = len(ga & gb)
+        if not inter:
+            continue
+        if containment:
+            scores = {(a, b): inter / len(ga), (b, a): inter / len(gb)}
+        else:
+            scores = {(a, b): inter / (len(ga) + len(gb) - inter)}
+        out.update({k: v for k, v in scores.items() if round(v, 6) >= threshold})
+    return out
+
+
+def test_ngram_pairs_match_python_reference(spark):
+    # the exploded kernel's pair set and scores equal an all-pairs Python
+    # computation over distinct word 3-gram sets when no cap binds:
+    # candidate keys are gram hashes (collisions only add candidates),
+    # verification is distinct-string-gram arithmetic on candidate docs only
     from schema_validator_spark.operators.dedup import (
         containment_pairs,
         ngram_jaccard_pairs,
@@ -874,30 +857,30 @@ def test_exploded_candidates_match_array_path_exactly(spark):
         (3, "entirely different page text sharing no shingles with others"),
         (4, contained),
         (5, contained + " wrapped inside much longer boilerplate " + base),
+        (6, base.upper().replace(" ", "\t\n ", 5)),    # case + whitespace
+        (7, "Short Doc"),                              # under 3 words
+        (8, "short   doc"),
+        (9, "rep rep rep rep rep " + contained),       # repeated gram
+        (10, "   "),                                   # degenerate: dropped
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn, col, thr in (
-        (ngram_jaccard_pairs, "jaccard", 0.3),
-        (containment_pairs, "containment", 0.8),
+    for fn, col, thr, is_containment in (
+        (ngram_jaccard_pairs, "jaccard", 0.3, False),
+        (containment_pairs, "containment", 0.8, True),
     ):
-        arrays = {
+        got = {
             (r["id_a"], r["id_b"]): r[col]
             for r in fn(df, "doc_id", threshold=thr).collect()
         }
-        exploded = {
-            (r["id_a"], r["id_b"]): r[col]
-            for r in fn(
-                df, "doc_id", threshold=thr, candidates="exploded"
-            ).collect()
-        }
-        assert exploded == arrays, col
-        assert arrays  # the planted pairs actually exercised the compare
-    # mod-p sampling composes with the exploded stream (deterministic keys)
+        want = _reference_pairs(rows, thr, containment=is_containment)
+        assert set(got) == set(want), col
+        assert got == pytest.approx(want, abs=1e-6), col
+        assert (7, 8) in got  # the short-doc fallback was exercised
+    # mod-p sampling composes with the gram stream (deterministic keys)
     sampled = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            df, "doc_id", threshold=0.3,
-            candidates="exploded", candidate_sample_mod=4,
+            df, "doc_id", threshold=0.3, candidate_sample_mod=4,
         ).collect()
     }
     full = {
@@ -906,3 +889,15 @@ def test_exploded_candidates_match_array_path_exactly(spark):
     }
     assert sampled.get((1, 2)) == full[(1, 2)]
     assert set(sampled) <= set(full)
+    # "exploded" is the only candidate generator left
+    assert {
+        (r["id_a"], r["id_b"])
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", threshold=0.3, candidates="exploded"
+        ).collect()
+    } == set(full)
+    for removed in ("shingles", "winnow"):
+        with pytest.raises(ValueError, match="removed"):
+            ngram_jaccard_pairs(df, "doc_id", candidates=removed)
+        with pytest.raises(ValueError, match="removed"):
+            containment_pairs(df, "doc_id", candidates=removed)

@@ -216,3 +216,18 @@ def test_shingle_chain_not_duplicated_into_filters(spark):
         for block in buf.getvalue().split("\n\n"):
             if block.lstrip().startswith("(") and ") Filter" in block.split("\n")[0]:
                 assert "regexp_replace" not in block, block.split("\n")[0]
+
+
+def test_ngram_pair_kernels_have_no_interpreted_hof(spark):
+    """Jaccard and containment build grams from exploded positions with
+    native per-row expressions: no higher-order function (interpreted, and
+    it knocks its projection out of whole-stage codegen) anywhere in
+    either plan."""
+    from schema_validator_spark.operators import dedup
+
+    for df in (
+        dedup.ngram_jaccard_pairs(_docs(spark), "doc_id"),
+        dedup.containment_pairs(_docs(spark), "doc_id"),
+    ):
+        p = _plan(df)
+        assert "lambdafunction" not in p, p
