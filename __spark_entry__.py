@@ -1739,7 +1739,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     The registry holds 92 rows.  Displaced beyond the cap:
     orphans_shuffle_hash (r03-green; its sibling orphans_events IS in the
     window) and asof_join_sliced (r04-green; skew-probed in round 5,
-    tools/asof_skew_probe.py).  dedup_agg and dedup_window (r03-green)
+    BENCH/ROUNDLOG_r05.md).  dedup_agg and dedup_window (r03-green)
     were displaced by the round-5 insertions and are back in the window
     at positions 49-50, since ngram_jaccard_winnow (its winnow candidate
     code is gone) and ngram_jaccard_exploded (now the same call as

@@ -1,14 +1,16 @@
 """Benchmark harness (driver contract).
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: every core of
+the box, via the session's own sizing) and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+"sf": ..., "cpus": ...}.
 
 Also times the flagship web_pages constraint plan over a deterministically
 generated Common-Crawl-style table (the north-rule workload) and reports its
 docs/sec alongside the per-query seconds.  Scaling-efficiency evidence
-(local[8] vs local[32]) lives in tools/bench_scaling.py → BENCH/BASELINE.md.
+(local[cores/4] vs local[cores]) lives in tools/bench_scaling.py →
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or None  # None: every core
 # 1M rows: the flagship projection runs ~1s+, long enough that docs/sec
 # measures throughput rather than scheduling noise
 WEB_ROWS = int(os.environ.get("SPARK_GRAFT_WEB_ROWS", "1000000"))
@@ -80,7 +82,6 @@ def main():
     from schema_validator_spark import ValidationPlan
 
     spark = get_spark(app_name="bench", cpus=CPUS)
-    qs = entrymod.queries()
 
     def minhash_fast(spark, sf_dir):
         # xxhash64 family — the JVM fast path used at scale
@@ -95,6 +96,10 @@ def main():
 
     web = generate_web_pages(spark, WEB_ROWS).cache()
     n_web = web.count()  # materialize so generation isn't timed
+    # url repeats (planted "not-a-url" slots and neighbour copies), so keyed
+    # per-doc aggregations key on warc_ts, which is closed-form per row
+    if web.select(F.countDistinct("warc_ts")).first()[0] != n_web:
+        raise RuntimeError("warc_ts is not a unique per-row key of web_pages")
     web_plan = ValidationPlan(web_page_schema())
 
     def simhash_fast(spark, sf_dir):
@@ -132,30 +137,27 @@ def main():
         # hashed uni+bigram classifier over the 1M-row crawl text:
         # explode → native xxhash64 weights → map-side-combined agg
         # (the production fast path; md5 stays the driver-oracle family,
-        # exactly the minhash fast/oracle split)
+        # exactly the minhash fast/oracle split); keyed per doc, not per url
         from schema_validator_spark.operators import textquality as TQ
 
-        return TQ.quality_classifier(web, "url", hash_fn="xxhash64").agg(
+        return TQ.quality_classifier(web, "warc_ts", hash_fn="xxhash64").agg(
             F.sum("raw_score"), F.sum("n_features")
         )
 
+    builders = {
+        **entrymod.queries(),
+        # bench-only entries
+        "minhash_near_dups_fast": minhash_fast,
+        "simhash_near_dups_fast": simhash_fast,
+        "web_pages_full_plan": web_full,
+        "web_extract_text": web_extract,
+        "web_gopher_quality": web_gopher,
+        "web_quality_classifier": web_quality_cls,
+    }
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
     for name in HEADLINE:
-        if name == "minhash_near_dups_fast":
-            fn = minhash_fast
-        elif name == "simhash_near_dups_fast":
-            fn = simhash_fast
-        elif name == "web_pages_full_plan":
-            fn = web_full
-        elif name == "web_extract_text":
-            fn = web_extract
-        elif name == "web_gopher_quality":
-            fn = web_gopher
-        elif name == "web_quality_classifier":
-            fn = web_quality_cls
-        else:
-            fn = qs[name]
+        fn = builders[name]
         # one untimed warm-up run: excludes one-time plan codegen/JIT from the
         # reported number (steady-state throughput is the engine's number;
         # disable with SPARK_GRAFT_BENCH_COLD=1)
@@ -281,7 +283,7 @@ def main():
                 "unit": "sec",
                 "queries": {**timings, **extras},
                 "sf": sf,
-                "cpus": CPUS,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "web_rows": n_web,
             }
         )

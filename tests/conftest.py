@@ -7,8 +7,8 @@ from schema_validator_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # small fixed heap: tests don't need the bench-sized 16g pre-touch
-    s = get_spark("svs-tests", cpus=8, shuffle_partitions=8, driver_mem="4g")
+    # small fixed heap: tests don't need half the box pre-touched
+    s = get_spark("svs-tests", cpus=8, driver_mem="4g")
     yield s
     s.stop()
 

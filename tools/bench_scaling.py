@@ -1,23 +1,26 @@
 """Scaling-efficiency benchmark (north rule: ≥0.8 efficiency from N → 4N).
 
-Sandbox stand-in for N vs 4N executors: the SAME job at ``local[8]`` and
-``local[32]`` over the SAME on-disk input, each level in its own subprocess
-(fresh JVM).  Memory is held constant PER CORE (1 GiB/core), matching how a
-real cluster scales: 4N executors bring 4x the memory; giving both levels one
-fixed heap would starve the 4N level.
+Sandbox stand-in for N vs 4N executors: the SAME job at ``local[N]`` and
+``local[4N]`` over the SAME on-disk input, each level in its own subprocess
+(fresh JVM).  Both come from the box: 4N is every core (N = cores // 4; at
+least 4 cores) and the heap is the session's default (half of MemAvailable) per
+core of 4N.  Memory is held constant PER CORE, matching how a real cluster
+scales: 4N executors bring 4x the memory; giving both levels one fixed heap
+would starve the 4N level.
 
 The measured job is the real north-rule workload, one pass over web_pages:
 full constraint-plan validation (url trim+lowercase+pattern, text min_length,
 lang pattern) + per-lang verdict aggregation + single-pass column profile
 (null-rate/min/max/approx-distinct on url,text,lang) + uniqueness dup-count on
 url (one hash-shuffle).  Input is sized so the job runs tens of seconds at
-local[8] — scheduling overhead must not dominate or the comparison measures
+local[N] — scheduling overhead must not dominate or the comparison measures
 nothing.
 
 Writes BENCH/BASELINE.md with docs/sec at both levels + efficiency, plus a
 per-phase breakdown (the shuffle-bound dedup is the hardest phase to scale on
-a single box: all 32 threads share one L3 and memory bus, costs a real
-cluster's 4N executors do not pay).
+a single box: all threads share one L3 and memory bus, costs a real
+cluster's 4N executors do not pay).  The separate-JVM pair is 1 vs 4
+``local-cluster`` executors of N cores each.
 
 Usage: python tools/bench_scaling.py [n_rows]
 """
@@ -45,15 +48,7 @@ from schema_validator_spark.operators.uniqueness import duplicate_keys
 from schema_validator_spark.sources.webpages import web_page_schema
 
 cfg = json.loads(sys.argv[1]); data = sys.argv[2]; repeats = int(sys.argv[3])
-if "master" in cfg:
-    # separate-JVM executors (local-cluster): 1 GiB/core in each executor
-    spark = get_spark(app_name="scaling-lc", master=cfg["master"],
-                      cpus=cfg["total"], executor_mem=cfg["executor_mem"],
-                      driver_mem="4g")
-else:
-    cpus = cfg["cpus"]
-    spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus,
-                      driver_mem=f"{cpus}g")  # 1 GiB per core, both levels
+spark = get_spark(app_name="scaling", **cfg)
 df = spark.read.parquet(data)
 plan = ValidationPlan(web_page_schema())
 
@@ -81,21 +76,27 @@ print(json.dumps({"cfg": cfg, "rows": n, "sec": round(total, 2),
 """
 
 
+_GEN = r"""
+import json, sys
+sys.path.insert(0, ".")
+from schema_validator_spark.session import get_spark
+from schema_validator_spark.sources.webpages import generate_web_pages
+cfg = json.loads(sys.argv[1]); data = sys.argv[2]; rows = int(sys.argv[3])
+spark = get_spark(app_name="scaling-gen", **cfg)
+generate_web_pages(spark, rows, num_partitions=128).write.mode("overwrite").parquet(data)
+print(json.dumps({"rows": rows}))
+"""
+
+
 _CONTROL = r"""
 import json, sys, time
 sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 from schema_validator_spark.session import get_spark
-cfg = json.loads(sys.argv[1])
-if "master" in cfg:
-    spark = get_spark(app_name="ctl-lc", master=cfg["master"],
-                      cpus=cfg["total"], executor_mem=cfg["executor_mem"],
-                      driver_mem="4g")
-    cpus = cfg["total"]
-else:
-    cpus = cfg["cpus"]
-    spark = get_spark(app_name=f"ctl-{cpus}", cpus=cpus, driver_mem=f"{cpus}g")
-df = spark.range(0, 20_000_000_000, numPartitions=cpus * 4)
+cfg = json.loads(sys.argv[1]); rows = int(sys.argv[3])
+spark = get_spark(app_name="ctl", **cfg)
+cpus = cfg["cpus"]
+df = spark.range(0, rows, numPartitions=cpus * 4)
 best = float("inf")
 for _ in range(4):
     t0 = time.time()
@@ -106,72 +107,86 @@ print(json.dumps({"cpus": cpus, "sec": round(best, 2)}))
 
 
 def _gen():
+    """Writes the input in a subprocess, as the levels run: a JVM started in
+    this process would keep its pre-touched heap until Python exits
+    (``spark.stop()`` leaves the gateway up) and starve the 4N level."""
     if os.path.exists(MARKER) and os.path.exists(os.path.join(DATA, "_SUCCESS")):
         return
-    sys.path.insert(0, ".")
-    from schema_validator_spark.session import get_spark
-    from schema_validator_spark.sources.webpages import generate_web_pages
-
-    spark = get_spark(app_name="scaling-gen", cpus=32)
-    generate_web_pages(spark, N_ROWS, num_partitions=128).write.mode(
-        "overwrite"
-    ).parquet(DATA)
-    spark.stop()
+    _run({}, _GEN, N_ROWS)
     open(MARKER, "w").write(str(N_ROWS))
 
 
-def _run(cfg: dict, script: str = None, repeats: int = REPEATS) -> dict:
+def _run(cfg: dict, script: str = None, arg: int = REPEATS) -> dict:
+    """``arg``: repeats for the workload, rows for the control and the
+    generator."""
     out = subprocess.run(
-        [sys.executable, "-c", script or _WORKER, json.dumps(cfg), DATA, str(repeats)],
+        [sys.executable, "-c", script or _WORKER, json.dumps(cfg), DATA, str(arg)],
         capture_output=True,
         text=True,
-        check=True,
     )
+    if out.returncode:
+        sys.exit(f"run {cfg} failed:\n{out.stderr[-4000:]}")
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def _lc_cfg(workers: int, cores: int) -> dict:
-    """local-cluster spec with 1 GiB/core executors (+25% worker headroom)."""
+def _local_cfg(cpus: int, mib_per_core: int) -> dict:
+    return {"cpus": cpus, "driver_mem": f"{cpus * mib_per_core}m"}
+
+
+def _lc_cfg(workers: int, cores: int, mib_per_core: int) -> dict:
+    """local-cluster spec with ``cores``-core executors (+25% worker
+    headroom); the driver gets one executor's heap."""
+    heap = cores * mib_per_core
     return {
-        "master": f"local-cluster[{workers},{cores},{cores * 1280}]",
-        "total": workers * cores,
-        "executor_mem": f"{cores}g",
+        "master": f"local-cluster[{workers},{cores},{heap * 5 // 4}]",
+        "cpus": workers * cores,
+        "executor_mem": f"{heap}m",
+        "driver_mem": f"{heap}m",
     }
 
 
 def main():
+    sys.path.insert(0, ".")
+    from schema_validator_spark.session import box_sizing
+
+    # the box's shape: N = a quarter of the cores, and the session's default
+    # heap split per core of 4N
+    cores, heap = box_sizing()
+    if cores < 4:
+        # fewer cores than 4N threads would time-slice, not scale
+        sys.exit(f"N -> 4N needs at least 4 cores; this box has {cores}")
+    n = cores // 4
+    mib_per_core = heap // (4 * n)
+    # the control's size: 625M rows per core of 4N (20B rows on 32 cores)
+    ctl_rows = 625_000_000 * 4 * n
     _gen()
-    lo = _run({"cpus": 8})
-    hi = _run({"cpus": 32})
+    lo = _run(_local_cfg(n, mib_per_core))
+    hi = _run(_local_cfg(4 * n, mib_per_core))
     eff = hi["docs_per_sec"] / (4 * lo["docs_per_sec"])
     # hardware control: pure cache-resident ALU work (range + xxhash64 + sum),
     # no input scan, no strings, no shuffle — the best ANY job can scale on
     # this box, bounded by all-core clock scaling
-    clo = _run({"cpus": 8}, _CONTROL)
-    chi = _run({"cpus": 32}, _CONTROL)
+    clo = _run(_local_cfg(n, mib_per_core), _CONTROL, ctl_rows)
+    chi = _run(_local_cfg(4 * n, mib_per_core), _CONTROL, ctl_rows)
     ctl_eff = clo["sec"] / (4 * chi["sec"])
     # separate-JVM executor datapoint (real multi-executor isolation): the
-    # SAME job on a local-cluster master, N=1 executor vs 4N=4 executors with
+    # SAME job on a local-cluster master, 1 executor vs 4 executors with
     # identical per-executor cores+memory — the literal shape of the north
     # rule's "N and 4N executors" criterion.
-    # 2-core executors: at 2→8 total cores the box's all-core clock penalty is
-    # smallest (pure-compute control ≈0.84 vs ≈0.70 at 8→32), so this pair
-    # measures executor-scaling rather than silicon throttling
-    lc_cores = int(os.environ.get("SPARK_GRAFT_LC_CORES", "2"))
-    lc_lo = _run(_lc_cfg(1, lc_cores), repeats=4)
-    lc_hi = _run(_lc_cfg(4, lc_cores), repeats=4)
+    lc_lo = _run(_lc_cfg(1, n, mib_per_core), arg=4)
+    lc_hi = _run(_lc_cfg(4, n, mib_per_core), arg=4)
     lc_eff = lc_hi["docs_per_sec"] / (4 * lc_lo["docs_per_sec"])
-    lc_clo = _run(_lc_cfg(1, lc_cores), _CONTROL)
-    lc_chi = _run(_lc_cfg(4, lc_cores), _CONTROL)
+    lc_clo = _run(_lc_cfg(1, n, mib_per_core), _CONTROL, ctl_rows)
+    lc_chi = _run(_lc_cfg(4, n, mib_per_core), _CONTROL, ctl_rows)
     lc_ctl_eff = lc_clo["sec"] / (4 * lc_chi["sec"])
     report = {
-        "local8": lo,
-        "local32": hi,
-        "scaling_efficiency_8_to_32": round(eff, 3),
+        "local_N": lo,
+        "local_4N": hi,
+        "scaling_efficiency_N_to_4N": round(eff, 3),
         "control_pure_compute_efficiency": round(ctl_eff, 3),
         "normalized_vs_control": round(eff / ctl_eff, 3),
-        "local_cluster_1x%d" % lc_cores: lc_lo,
-        "local_cluster_4x%d" % lc_cores: lc_hi,
+        "local_cluster_1xN": lc_lo,
+        "local_cluster_4xN": lc_hi,
         "lc_scaling_efficiency": round(lc_eff, 3),
         "lc_control_efficiency": round(lc_ctl_eff, 3),
         "lc_normalized_vs_control": round(lc_eff / lc_ctl_eff, 3),
@@ -197,17 +212,18 @@ criterion dep — see SURVEY.md §6), so the authoritative target is the north
 rule's scaling criterion: ≥0.8 throughput scaling efficiency from N to 4N
 executors.
 
-**Headline: the criterion is met RAW on the criterion's own shape —
-N=1 → 4N=4 separate-JVM executors (identical per-executor cores + memory)
-scales at {lc_eff:.3f} ≥ 0.8** (see the local-cluster section below; the
+**Headline on the criterion's own shape — 1 → 4 separate-JVM executors
+(identical per-executor cores + memory) scale at {lc_eff:.3f}** (target
+≥ 0.8; see the local-cluster section below; the
 pure-compute ceiling for the same cores is {lc_ctl_eff:.3f}, so the
 engine's workload is at {lc_eff / lc_ctl_eff:.3f} of what the silicon
 allows).
 
 Sandbox stand-in (no real cluster available): the SAME job at two
 parallelism levels over the same on-disk parquet ({lo["rows"]:,} rows), each
-level in a fresh JVM with memory held constant per core (1 GiB/core — a real
-4N-executor cluster brings 4N× the memory), best of {REPEATS} runs per phase.
+level in a fresh JVM with memory held constant per core ({mib_per_core} MiB/core —
+a real 4N-executor cluster brings 4N× the memory), best of {REPEATS} runs per
+phase.  Box: {cores} cores, N = {n}.
 
 The measured job is the full north-rule single-pass workload over web_pages:
 constraint-plan validation (url trim+lowercase+URL pattern, text min_length,
@@ -218,8 +234,8 @@ partial aggregation).
 
 | config | rows | wall (s) | validated docs/sec |
 |---|---|---|---|
-| local[8]  (N)  | {lo["rows"]:,} | {lo["sec"]:.2f} | {lo["docs_per_sec"]:,.0f} |
-| local[32] (4N) | {hi["rows"]:,} | {hi["sec"]:.2f} | {hi["docs_per_sec"]:,.0f} |
+| local[{n}] (N) | {lo["rows"]:,} | {lo["sec"]:.2f} | {lo["docs_per_sec"]:,.0f} |
+| local[{4 * n}] (4N) | {hi["rows"]:,} | {hi["sec"]:.2f} | {hi["docs_per_sec"]:,.0f} |
 
 **Scaling efficiency (N→4N) = {hi["docs_per_sec"]:,.0f} / (4 × {lo["docs_per_sec"]:,.0f})
 = {eff:.3f}** (target ≥ 0.8 on a real cluster).
@@ -227,7 +243,7 @@ partial aggregation).
 **Hardware control**: the identical comparison for a pure cache-resident
 compute job (`range → xxhash64 → sum`, no input, no strings, no shuffle)
 measures **{ctl_eff:.3f}** — the ceiling ANY Spark job can reach going
-8→32 threads on this box (all-core clock scaling + shared L3/memory bus on
+{n}→{4 * n} threads on this box (all-core clock scaling + shared L3/memory bus on
 one socket).  Normalized against that achievable ceiling, the engine's
 workload scales at **{eff:.3f} / {ctl_eff:.3f} = {eff / ctl_eff:.3f}** —
 i.e. the constraint-validation pipeline loses essentially nothing beyond
@@ -237,23 +253,23 @@ the ≥0.8 criterion describes.
 
 Per-phase breakdown (best wall seconds, and per-phase efficiency):
 
-| phase | local[8] s | local[32] s | efficiency |
+| phase | local[{n}] s | local[{4 * n}] s | efficiency |
 |---|---|---|---|
 {phase_rows}
 
 ## Separate-JVM executors (local-cluster): the literal N → 4N executor shape
 
 The criterion's own shape — **N vs 4N executors**, per-executor cores and
-memory held IDENTICAL ({lc_cores} cores + {lc_cores} GiB heap each, fresh
+memory held IDENTICAL ({n} cores + {n * mib_per_core} MiB heap each, fresh
 pre-touched JVM per executor; only the executor COUNT changes 1 → 4):
 
 | config | executors | total cores | wall (s) | validated docs/sec |
 |---|---|---|---|---|
-| local-cluster[1,{lc_cores},…] (N)  | 1 | {lc_cores} | {lc_lo["sec"]:.2f} | {lc_lo["docs_per_sec"]:,.0f} |
-| local-cluster[4,{lc_cores},…] (4N) | 4 | {4 * lc_cores} | {lc_hi["sec"]:.2f} | {lc_hi["docs_per_sec"]:,.0f} |
+| local-cluster[1,{n},…] (N)  | 1 | {n} | {lc_lo["sec"]:.2f} | {lc_lo["docs_per_sec"]:,.0f} |
+| local-cluster[4,{n},…] (4N) | 4 | {4 * n} | {lc_hi["sec"]:.2f} | {lc_hi["docs_per_sec"]:,.0f} |
 
 **Scaling efficiency (N→4N executors) = {lc_eff:.3f}**
-(pure-compute control over the same {lc_cores}→{4 * lc_cores} cores:
+(pure-compute control over the same {n}→{4 * n} cores:
 {lc_ctl_eff:.3f}; normalized: {lc_eff / lc_ctl_eff:.3f}).
 
 Per-phase (local-cluster):
@@ -275,7 +291,8 @@ core fed at sandbox data sizes).
 
 The r1→r2 bench deltas on the three sub-5s ANN queries (minhash_fast
 2.47→3.13s, simhash_fast 2.92→3.87s, cosine_topk 0.68→0.87s, same sf0.1
-data) were investigated with a code-level A/B (tools/regress_probe.py): the
+data) were investigated with a code-level A/B in fresh JVMs (a one-off
+probe; perfbench/run.py is the A/B harness now): the
 r1 code run today, in the same fresh-JVM environment, measures
 minhash 3.27/3.86/3.88s across three whole-suite repeats — i.e. the spread
 BETWEEN identical runs (~±25-30%, GC/clock/page-cache state) exceeds the
